@@ -1,0 +1,8 @@
+"""Put the benchmark modules and the engine package on the import path."""
+
+import os
+import sys
+
+BENCH = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(BENCH))
+sys.path.insert(0, BENCH)
